@@ -84,6 +84,31 @@ def test_cli_per_stage_chain_equals_pipeline(tmp_path):
     assert _read_lines(s4) == _read_lines(one_shot / "SortedTFIDF")
 
 
+def test_cli_calctfidf_zero_count_line_is_not_a_posting(tmp_path):
+    """df counts the documents in which a word occurs. A hand-written
+    calctfidf input line with count 0 names no occurrence: the stage drops
+    it, it does not raise its word's df, and a word with only such lines
+    is absent from the output instead of dividing by zero."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    (inp / "part-00000").write_text(
+        "spark|a.txt\t2|3\n"
+        "engine|a.txt\t1|3\n"
+        "engine|b.txt\t0|2\n"
+        "room|b.txt\t2|2\n"
+        "ghost|b.txt\t0|2\n"
+    )
+    out = tmp_path / "out"
+    assert main(["calctfidf", str(inp), str(out), "--total-docs", "2"]) == 0
+    rows = dict(
+        (tuple(l.split("\t")[0].split("|")), float(l.split("\t")[1]))
+        for l in _read_lines(out)
+    )
+    assert set(rows) == {("spark", "a.txt"), ("engine", "a.txt"), ("room", "b.txt")}
+    # engine's df is 1 (a.txt only), not 2
+    assert math.isclose(rows[("engine", "a.txt")], 1 / 3 * math.log(2), rel_tol=1e-12)
+
+
 def test_cli_stage_refuses_existing_output(tmp_path):
     inp = tmp_path / "input"
     inp.mkdir()

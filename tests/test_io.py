@@ -178,6 +178,19 @@ def test_text_corpus_invalid_utf8_survives_visibly(spark, tmp_path):
     assert any("�" in t for t in texts)
 
 
+def test_text_corpus_doc_id_is_the_raw_file_name(spark, tmp_path):
+    """The doc id is the file name as the directory lists it
+    (``Path.getName()``), not its URI form: no ``%20`` for a space, no
+    ``%25`` for a percent sign, and a literal ``+`` is not a space."""
+    names = ["a b.txt", "50%.txt", "a+b.txt", "ü%41.txt"]
+    p = tmp_path / "corpus"
+    p.mkdir()
+    for n in names:
+        (p / n).write_text("one line\n")
+    rows = read_text_corpus(spark, str(p)).collect()
+    assert sorted(r.doc for r in rows) == sorted(names)
+
+
 def test_kv_text_reader_handles_tabless_lines(spark, tmp_path):
     """A KV line without a TAB parses as (whole line, '') — the documented
     degradation, matching KeyValueTextInputFormat."""

@@ -161,6 +161,54 @@ def test_doc_freq_salted_joins_on_composite_key(spark):
     assert plan.count("HashAggregate") >= 4
 
 
+def _final_tree(plan: str) -> str:
+    """The adaptive plan's executed tree, without its initial plan."""
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_cli_build_scans_and_tokenizes_its_corpus_once(spark, tmp_path):
+    # The postings and the df aggregate both consume the (word, doc)
+    # partial word count: it must be ONE exchange, read a second time as
+    # a ReusedExchange, over ONE scan of the text directory. If the df
+    # branch's aggregate stops reading ``count`` (or a rule folds
+    # ``count > 0`` away), column pruning makes the branches differ and
+    # the corpus is scanned and tokenized twice.
+    from tf_idf_mapreduce_spark.cli import main
+
+    inp = tmp_path / "input"
+    inp.mkdir()
+    for i in range(6):
+        (inp / f"d{i}.txt").write_text(f"spark engine w{i}\nthe fox w{i % 2}\n")
+    assert main([str(inp), str(tmp_path / "out")]) == 0
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = next(
+        d
+        for d in (
+            execs.apply(i).physicalPlanDescription()
+            for i in reversed(range(execs.size()))
+        )
+        if str(inp) in d
+    )
+    tree = _final_tree(plan)
+    assert "ReusedExchange" in tree
+    assert tree.count("Scan text") == 1
+
+
+@pytest.mark.parametrize("name", ["tfidf_full", "tfidf_doc_freq_salted"])
+def test_tfidf_tokenizes_its_corpus_once(spark, name):
+    # same invariant for the registry chain (doc_freq) and the salted
+    # variant, whose (word, _salt) partials must read the same exchange
+    df = entrymod.queries()[name](spark, SF)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    tree = _final_tree(plan)
+    text_scans = re.findall(r"FileScan parquet .*ReadSchema: struct<[^>]*text", tree)
+    assert len(text_scans) == 1
+    assert "ReusedExchange" in tree
+
+
 @pytest.mark.parametrize(
     "name",
     ["tfidf_docsim_lsh", "dedup_embedding_lsh_pairs", "sim_knn_graph_ann",

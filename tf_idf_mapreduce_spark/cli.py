@@ -94,6 +94,10 @@ def _stage_calctfidf(spark: SparkSession, args: argparse.Namespace) -> None:
         F.substring_index("val", "|", 1).cast("long").alias("count"),
         F.substring_index("val", "|", -1).cast("long").alias("doc_total"),
     )
+    # a line with count <= 0 (only a hand-written file has one) names no
+    # occurrence: it is not a posting, and a word with no other line
+    # would get df 0 and divide by zero in idf
+    parsed = parsed.where(F.col("count") > 0)
     scored = tfidf(doc_freq(parsed), F.lit(args.total_docs))
     write_kv_text(scored, args.output, ["word", "doc"], "tfidf")
 

@@ -108,8 +108,12 @@ def tokenize(df: DataFrame, text_col: str = "text", doc_col: str = "doc") -> Dat
     pipeline — kept row-level because exploded rows feed the downstream
     groupBy directly, with no array materialization per doc.
     """
+    # no same-name alias: the optimizer drops such an alias in some
+    # branches of a plan and keeps it in others (below a Union), and the
+    # branches then no longer share their exchanges
+    doc = F.col(doc_col) if doc_col == "doc" else F.col(doc_col).alias("doc")
     outer = df.select(
-        F.col(doc_col).alias("doc"),
+        doc,
         F.explode(F.split(F.col(text_col), _WS)).alias("tok"),
     ).where(F.col("tok") != "")
     std = outer.select("doc", standardize_token(F.col("tok")).alias("norm"))

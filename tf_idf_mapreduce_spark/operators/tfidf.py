@@ -2,17 +2,24 @@
 
 Reference pipeline (TfidfMapReduce.java:63-97): WordCount → CountTF →
 CalcTFIDF → SortByValue, each materialized to HDFS between jobs. Here each
-stage is a lazy transform; composed they form ONE Catalyst plan with three
-hash exchanges — on (word,doc), doc, word — plus a final range-partitioned
-sort. No disk round-trips, and every stage gets map-side partial
-aggregation the reference never configured (no combiner in
+stage is a lazy transform; composed they form ONE Catalyst plan over ONE
+scan of the corpus: a (word, doc) hash exchange after the map-side partial
+word count, shared by the postings and the df aggregate (the second
+consumer reads it as a ``ReusedExchange``), a doc exchange feeding the
+doc-total window, a word exchange feeding the df aggregate, which is
+broadcast-joined back onto the postings, and a final range-partitioned
+sort. No disk round-trips, and every aggregate gets the map-side partial
+combine the reference never configured (no combiner in
 WordCount.java:149-159).
 
 Scale notes (100 TB posture):
-- A2/A3 use unbounded partition windows, not agg+join: one exchange each,
-  and Spark's window operator spills — unlike the reference reducers that
-  buffer whole groups in an in-memory List/HashMap (CountTF.java:92-99,
-  CalcTFIDF.java:111-120), an OOM at scale.
+- A2 uses an unbounded window partitioned on doc, not agg+join: one
+  exchange, and Spark's window operator spills — unlike the reference
+  reducer that buffers a whole doc in an in-memory List (CountTF.java:
+  92-99), an OOM at scale. Per-doc groups are bounded by document length.
+- A3 is an aggregate joined back on word, not a window partitioned on
+  word: a word window puts every posting of a stopword in one task
+  (``doc_freq``).
 - The global sort is range-partitioned with sampling (orderBy), not the
   reference's single reducer (SortByValue.java:111-126, default 1 reduce).
 - ``total_docs`` enters the plan as a broadcast 1-row aggregate, mirroring
@@ -52,22 +59,47 @@ def doc_totals(wc: DataFrame) -> DataFrame:
     return wc.withColumn("doc_total", F.sum("count").over(w))
 
 
+def _postings_df() -> Column:
+    """df as an aggregate over postings rows (word, doc, count, ...):
+    the number of rows whose ``count`` is positive.
+
+    Not ``count(*)``: that never reads ``count``, so column pruning drops
+    the count from the df branch's (word, doc) partial aggregate, the
+    branch no longer matches the postings branch below their (word, doc)
+    exchange, and the plan scans and tokenizes the corpus twice. Nor
+    ``count(count)``: NullPropagation rewrites a count of a non-nullable
+    column to ``count(1)``. ``count_if(count > 0)`` keeps both branches
+    identical, so AQE reuses the exchange (``tests/test_plans.py`` pins
+    one scan). On postings from ``word_count`` every count is >= 1, so
+    it equals the row count.
+    """
+    return F.count_if(F.col("count") > 0)
+
+
 def doc_freq(wtc: DataFrame) -> DataFrame:
-    """Job 3a (A3): document frequency — distinct docs containing each word.
+    """Job 3a (A3): document frequency — df = documents in which the word
+    occurs, i.e. postings rows with ``count > 0``.
 
     Reference: reducer collects the per-word posting list into a HashMap and
     counts it (CalcTFIDF.java:111-123). Input rows are already distinct per
-    (word, doc) (Job 1's group-by), so counting rows per word is exact.
+    (word, doc) (Job 1's group-by), so counting rows per word is exact. A
+    row whose count is 0 or negative (possible only in a hand-written
+    interchange file fed to the ``calctfidf`` stage) is kept but does not
+    raise df, so a word with no other row gets df 0; the ``calctfidf``
+    stage drops such lines before scoring.
 
     Skew posture: two-phase aggregate + equi-join, NOT a partition window.
     ``count(*) over (partition by word)`` puts every posting of a word in
     ONE window task — a stopword at 100 TB is billions of rows on a single
     core. The aggregate gets map-side partial combine (skew neutralized
-    before the shuffle), and AQE's skew-join splitting handles the probe
-    side of the join back.
+    before the shuffle), and its output — one row per word — is small
+    enough to broadcast, so the join back is a ``BroadcastHashJoin`` that
+    never shuffles the postings. Only a vocabulary too large to broadcast
+    plans a sort-merge join, where a stopword's postings meet in one join
+    task — ``doc_freq_salted``'s case.
     Schema: + df.
     """
-    counts = wtc.groupBy("word").agg(F.count("*").alias("df"))
+    counts = wtc.groupBy("word").agg(_postings_df().alias("df"))
     return wtc.join(counts, "word")
 
 
@@ -90,9 +122,13 @@ def doc_freq_salted(wtc: DataFrame, n_salts: int = DOC_FREQ_SALTS) -> DataFrame:
     Exactly ``doc_freq``'s rows — salting a sum and replicating a
     broadcast-shaped dimension never changes the relation.
     """
-    salt = F.pmod(F.abs(F.hash("doc")), F.lit(n_salts))
+    # pmod is typed nullable, and the join would then infer an IsNotNull
+    # on the probe side's salt and push it down to the scan, so the probe
+    # and the count branch would no longer share their (word, doc)
+    # exchange. The coalesce never fires: the salt is never null.
+    salt = F.coalesce(F.pmod(F.abs(F.hash("doc")), F.lit(n_salts)), F.lit(0))
     salted = wtc.withColumn("_salt", salt)
-    partial = salted.groupBy("word", "_salt").agg(F.count("*").alias("_pc"))
+    partial = salted.groupBy("word", "_salt").agg(_postings_df().alias("_pc"))
     counts = partial.groupBy("word").agg(F.sum("_pc").alias("df"))
     rep = counts.select(
         "word",
@@ -207,7 +243,7 @@ def _index_side(corpus: DataFrame, checkpoint: bool = False):
     wtc = doc_totals(word_count(tokenize(corpus)))
     if checkpoint:
         wtc = wtc.localCheckpoint()
-    dfx = wtc.groupBy("word").agg(F.count("*").alias("dfx"))
+    dfx = wtc.groupBy("word").agg(_postings_df().alias("dfx"))
     n = corpus.agg(F.countDistinct("doc").alias("nx"))
     return wtc, dfx, n
 

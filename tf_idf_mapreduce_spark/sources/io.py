@@ -8,7 +8,8 @@ TextInputFormat via WordCount.java:156); its only sink is TAB-separated
 Spark-first mapping:
 
 - S1 text-line scan      → ``spark.read.text(dir)`` (splittable, columnar batch)
-- S2 doc-id attach       → ``input_file_name()`` + basename, one expression
+- S2 doc-id attach       → ``_metadata.file_name``, percent-decoded: the raw
+                           file name, one deterministic expression
 - S4 KV re-scan          → unnecessary: stages pipeline in memory; provided
                            anyway for reading reference-format output
 - S5 KV text sink        → ``concat_ws('\\t', ...)`` + ``write.text`` (kept only
@@ -214,14 +215,22 @@ def read_text_corpus(spark: SparkSession, path: str) -> DataFrame:
     ``((FileSplit) ...).getPath().getName()`` doc identity (WordCount.java:89).
     Returns ``(doc string, text string)``.
 
+    The doc id is the file's raw name. ``_metadata.file_name`` comes from
+    the file's URI, so ``a b.txt`` arrives as ``a%20b.txt``; it is
+    percent-decoded, with ``+`` escaped first because ``url_decode`` is
+    form decoding and would turn a literal ``+`` into a space. Unlike
+    ``input_file_name()`` this is an ordinary column of the scan, not a
+    nondeterministic expression.
+
     Corruption contract (tested): there is no "malformed line" for a
     text scan — every byte sequence is a line — but invalid UTF-8 is
     REPLACED (U+FFFD), never fatal and never silently dropped: the row
     survives with its damage visible, the same
     damage-visible-not-fatal posture as ``read_jsonl_corpus``.
     """
+    name = F.col("_metadata.file_name")
     return spark.read.text(path).select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("doc"),
+        F.url_decode(F.replace(name, F.lit("+"), F.lit("%2B"))).alias("doc"),
         F.col("value").alias("text"),
     )
 
